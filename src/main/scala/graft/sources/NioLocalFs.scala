@@ -25,12 +25,14 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * [[NioRawLocalFileSystem]] replaces the shell chmod with one
   * `java.nio.file.Files.setPosixFilePermissions` call — same on-disk
-  * result, no process. On a filesystem without POSIX views it falls
-  * back to the parent's behavior.
+  * result, no process. NIO's permission set has no setuid, setgid or
+  * sticky bit, so a mode carrying any of them keeps the parent's path,
+  * as does a filesystem without POSIX views.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
-    try {
+    if (!NioLocalFs.viaNio(permission.toShort)) super.setPermission(p, permission)
+    else try {
       java.nio.file.Files.setPosixFilePermissions(
         pathToFile(p).toPath, NioLocalFs.posixOf(permission.toShort))
     } catch {
@@ -39,6 +41,12 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
 }
 
 object NioLocalFs {
+  /** setuid (0x800), setgid (0x400) and sticky (0x200). */
+  val SpecialBits = 0xE00
+
+  /** Whether a mode is fully expressible as a NIO permission set. */
+  def viaNio(mode: Short): Boolean = (mode & SpecialBits) == 0
+
   private val Bits: Seq[(Int, PosixFilePermission)] = Seq(
     0x100 -> OWNER_READ, 0x80 -> OWNER_WRITE, 0x40 -> OWNER_EXECUTE,
     0x20 -> GROUP_READ, 0x10 -> GROUP_WRITE, 0x8 -> GROUP_EXECUTE,

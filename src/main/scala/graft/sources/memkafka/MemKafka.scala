@@ -3,6 +3,7 @@ package graft.sources.memkafka
 import java.util
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -31,7 +32,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * change on both ends.
   *
   * Single-JVM by design (local-mode tests); the broker log is
-  * append-only, offsets are record indices (one logical partition).
+  * append-only and offsets are record indices into that one log. A
+  * micro-batch's offset range is still read by several tasks when it is
+  * large (see [[MemKafkaMicroBatchStream.split]]): in Kafka the topic
+  * partition is the unit of consumer parallelism, and contiguous
+  * sub-ranges of one log are the in-process equivalent.
   */
 object MemBroker {
   type Rec = (Array[Byte], Array[Byte])
@@ -53,8 +58,11 @@ object MemBroker {
   def slice(topic: String, from: Long, until: Long): Array[Rec] = {
     val l = log(topic)
     l.synchronized {
-      (from until math.min(until, l.size().toLong))
-        .map(i => l.get(i.toInt)).toArray
+      val end = math.min(until, l.size().toLong).toInt
+      val out = new Array[Rec](math.max(0, end - from.toInt))
+      var i = 0
+      while (i < out.length) { out(i) = l.get(from.toInt + i); i += 1 }
+      out
     }
   }
 
@@ -110,9 +118,13 @@ class MemKafkaMicroBatchStream(topic: String) extends MicroBatchStream {
   override def latestOffset(): Offset = MemOffset(MemBroker.size(topic))
   override def initialOffset(): Offset = MemOffset(0L)
   override def deserializeOffset(json: String): Offset = MemOffset(json.toLong)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    Array(MemRange(topic,
-      start.asInstanceOf[MemOffset].n, end.asInstanceOf[MemOffset].n))
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val parallelism = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.defaultParallelism).getOrElse(1)
+    MemKafkaMicroBatchStream.split(start.asInstanceOf[MemOffset].n,
+      end.asInstanceOf[MemOffset].n, parallelism)
+      .map { case (from, until) => MemRange(topic, from, until): InputPartition }
+  }
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
       override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -129,6 +141,21 @@ class MemKafkaMicroBatchStream(topic: String) extends MicroBatchStream {
     }
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
+}
+
+object MemKafkaMicroBatchStream {
+  /** Fewest records a split may hold: below this a task's fixed cost
+    * outweighs what it decodes, so small batches stay on one task. */
+  val MinRecordsPerSplit = 4096
+
+  /** Contiguous, non-overlapping ranges covering `[from, until)`: as
+    * many as `parallelism` allows while each keeps at least
+    * [[MinRecordsPerSplit]] records, and never fewer than one. */
+  def split(from: Long, until: Long, parallelism: Int): Array[(Long, Long)] = {
+    val n = math.max(0L, until - from)
+    val k = math.max(1L, math.min(parallelism.toLong, n / MinRecordsPerSplit)).toInt
+    Array.tabulate(k)(i => (from + n * i / k, from + n * (i + 1) / k))
+  }
 }
 
 /** Per-task writers buffer; the DRIVER appends everything in one epoch

@@ -30,6 +30,29 @@ class NioLocalFsSpec extends AnyFunSuite {
     }
   }
 
+  test("special bits route to stock Hadoop; plain modes go through NIO") {
+    for (mode <- Seq(0x1ff, 0x1ed, 0x0)) assert(NioLocalFs.viaNio(mode.toShort))
+    for (special <- Seq(0x200, 0x400, 0x800); mode <- Seq(0x1ed, 0x0))
+      assert(!NioLocalFs.viaNio((special | mode).toShort))
+    // posixOf has no bit for them: only the rwx triplets map
+    assert(NioLocalFs.posixOf(0x3ed.toShort) == NioLocalFs.posixOf(0x1ed.toShort))
+
+    val fs = FileSystem.get(java.net.URI.create("file:///"), newConf())
+    val dir = Files.createTempDirectory("nio_fs_special_").toFile
+    try {
+      def mode(f: java.io.File) =
+        Files.getAttribute(f.toPath, "unix:mode").asInstanceOf[Int] & 0xfff
+      val sticky = new java.io.File(dir, "sticky"); sticky.mkdir()
+      fs.setPermission(new Path(sticky.getAbsolutePath), new FsPermission(0x3ed.toShort))
+      assert(mode(sticky) == 0x3ed, Integer.toOctalString(mode(sticky)))
+      val plain = new java.io.File(dir, "plain"); plain.mkdir()
+      fs.setPermission(new Path(plain.getAbsolutePath), new FsPermission(0x1e8.toShort))
+      assert(mode(plain) == 0x1e8, Integer.toOctalString(mode(plain)))
+    } finally {
+      Option(dir.listFiles()).foreach(_.foreach(_.delete())); dir.delete()
+    }
+  }
+
   test("setPermission applies the mode without a shell fork") {
     val fs = FileSystem.get(java.net.URI.create("file:///"), newConf())
     assert(fs.isInstanceOf[GraftLocalFileSystem])

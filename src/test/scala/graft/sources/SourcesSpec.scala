@@ -93,23 +93,32 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("nullable union fields roundtrip, null and non-null branches") {
+    // both branches, both union orders, byte-identical to GenericDatumWriter
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val schema =
       """{"type": "record", "name": "Opt", "fields": [
         |  {"name": "id", "type": "string"},
         |  {"name": "note", "type": ["null", "string"]},
-        |  {"name": "n", "type": ["null", "long"]}
+        |  {"name": "n", "type": ["null", "long"]},
+        |  {"name": "m", "type": ["long", "null"]}
         |]}""".stripMargin
-    val df = Seq(("a", Some("hi"), Some(7L)), ("b", None, None))
-      .toDF("id", "note", "n")
-    val back = df.select(AvroWire.fromAvro(
-        AvroWire.toAvro(struct(col("id"), col("note"), col("n")), schema),
-        schema).as("r"))
-      .select("r.id", "r.note", "r.n")
-      .collect().map(r => (r.getString(0), Option(r.getString(1)),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
-    assert(back == Set(("a", Some("hi"), Some(7L)), ("b", None, None)))
+    val rows = Seq[(String, Option[String], Option[Long], Option[Long])](
+      ("a", Some("hé🚀"), Some(Long.MinValue), Some(Long.MaxValue)),
+      ("b", None, None, None),
+      ("c", Some("hi"), Some(7L), None),
+      ("", Some(""), Some(0L), Some(-1L)))
+    def ref(r: (String, Option[String], Option[Long], Option[Long])) = avroBytes(schema,
+      Seq(r._1, r._2.orNull, r._3.map(Long.box).orNull, r._4.map(Long.box).orNull))
+    val enc = rows.toDF("id", "note", "n", "m")
+      .select(AvroWire.toAvro(struct(col("id"), col("note"), col("n"), col("m")), schema))
+      .as[Array[Byte]].collect()
+    rows.zip(enc).foreach { case (r, b) => assert(b.toSeq == ref(r).toSeq, r) }
+    val back = rows.map(ref).toDF("b")
+      .select(AvroWire.fromAvro(col("b"), schema).as("r"))
+      .select("r.id", "r.note", "r.n", "r.m")
+      .as[(String, Option[String], Option[Long], Option[Long])].collect().toSeq
+    assert(back == rows)
   }
 
   test("framed produce->consume roundtrip through a live DSv2 transport") {
@@ -206,6 +215,194 @@ class SourcesSpec extends SparkSpec {
       s"expected exactly the pre-restart key to alert, got ${alerts.toSeq}")
     assert(alerts.head.sentTime == t0)
     assert(alerts.head.deadline == t0 + timeout)
+  }
+
+  /** Reference bytes: Avro's own GenericDatumWriter over `values` in
+    * schema field order, optionally behind the Confluent header. */
+  private def avroBytes(schemaJson: String, values: Seq[Any],
+      header: Option[Int] = None): Array[Byte] = {
+    import org.apache.avro.Schema
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.io.EncoderFactory
+    val schema = new Schema.Parser().parse(schemaJson)
+    val rec = new GenericData.Record(schema)
+    values.zipWithIndex.foreach { case (v, i) => rec.put(i, v) }
+    val out = new java.io.ByteArrayOutputStream()
+    header.foreach(id => out.write(java.nio.ByteBuffer.allocate(5).put(0: Byte).putInt(id).array()))
+    val enc = EncoderFactory.get().binaryEncoder(out, null)
+    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
+    enc.flush()
+    out.toByteArray
+  }
+
+  private val wireRows = Seq(
+    MessageStatus("m-1", "sent", 12125551234L, "att", 1700000000000L),
+    MessageStatus("", "", 0L, "", 0L),
+    MessageStatus("héllo-日本語-🚀", "délivré", Long.MinValue, "ünï", Long.MaxValue),
+    MessageStatus("x", "s", Long.MaxValue, "c", Long.MinValue),
+    MessageStatus("y", "d", -1L, "ĉ", -1L))
+
+  private def keyVals(m: MessageStatus) = Seq(m.messageId)
+  private def valueVals(m: MessageStatus) =
+    Seq(m.status, m.phoneNumber, m.carrier, m.timestamp)
+
+  test("avro encode is byte-identical to GenericDatumWriter, bare and framed") {
+    import spark.implicits._
+    val ds = wireRows.toDS()
+    val bare = KafkaIO.frame(ds).collect()
+    val framed = KafkaIO.frameConfluent(ds, 7, 9).collect()
+    wireRows.zipWithIndex.foreach { case (m, i) =>
+      val k = AvroWire.MessageKeySchema
+      val v = AvroWire.MessageStatusSchema
+      assert(bare(i).getAs[Array[Byte]](0).toSeq == avroBytes(k, keyVals(m)).toSeq, m)
+      assert(bare(i).getAs[Array[Byte]](1).toSeq == avroBytes(v, valueVals(m)).toSeq, m)
+      assert(framed(i).getAs[Array[Byte]](0).toSeq ==
+        avroBytes(k, keyVals(m), Some(7)).toSeq, m)
+      assert(framed(i).getAs[Array[Byte]](1).toSeq ==
+        avroBytes(v, valueVals(m), Some(9)).toSeq, m)
+    }
+  }
+
+  test("avro decode reads GenericDatumWriter bytes, bare and framed") {
+    import spark.implicits._
+    val ref = wireRows.map(m => (
+      avroBytes(AvroWire.MessageKeySchema, keyVals(m)),
+      avroBytes(AvroWire.MessageStatusSchema, valueVals(m)),
+      avroBytes(AvroWire.MessageKeySchema, keyVals(m), Some(3)),
+      avroBytes(AvroWire.MessageStatusSchema, valueVals(m), Some(4))))
+    val df = ref.toDF("key", "value", "fkey", "fvalue")
+    assert(KafkaIO.unframe(df.select("key", "value")).collect().toSeq == wireRows)
+    assert(KafkaIO.unframeConfluent(
+      df.select($"fkey".as("key"), $"fvalue".as("value")), 3, 4)
+      .collect().toSeq == wireRows)
+  }
+
+  test("decoded rows keep their own values within one task") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.BinaryType
+    // distinct rows of different lengths, so a shared decoder or string
+    // buffer would leak one row's bytes into the next
+    val msgs = (0 until 200).map(i => MessageStatus(s"m-$i-" + "é" * (i % 7),
+      if (i % 2 == 0) "sent" else "delivered", i.toLong, "c" * (i % 5), -i.toLong))
+    val framed = spark.createDataset(spark.sparkContext.parallelize(msgs, 1))
+    val back = KafkaIO.unframeConfluent(KafkaIO.frameConfluent(framed))
+    assert(back.rdd.getNumPartitions == 1)
+    assert(back.collect().toSeq == msgs)
+    // the same at the expression level, holding every output row
+    val dec = AvroDecode(BoundReference(0, BinaryType, nullable = false),
+      AvroWire.MessageStatusSchema, Some(2))
+    val held = msgs.map(m => dec.eval(InternalRow(
+      avroBytes(AvroWire.MessageStatusSchema, valueVals(m), Some(2)))).asInstanceOf[InternalRow])
+    msgs.zip(held).foreach { case (m, r) =>
+      assert((r.getUTF8String(0).toString, r.getLong(1), r.getUTF8String(2).toString,
+        r.getLong(3)) == ((m.status, m.phoneNumber, m.carrier, m.timestamp)))
+    }
+  }
+
+  test("confluent decode rejects short frames, bad magic and wrong ids in place") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.BinaryType
+    val dec = AvroDecode(BoundReference(0, BinaryType, nullable = false),
+      AvroWire.MessageKeySchema, Some(7))
+    val good = avroBytes(AvroWire.MessageKeySchema, Seq("m-1"), Some(7))
+    assert(dec.eval(InternalRow(good)).asInstanceOf[InternalRow]
+      .getUTF8String(0).toString == "m-1")
+    def rejects(b: Array[Byte], why: String) = {
+      val ex = intercept[IllegalArgumentException](dec.eval(InternalRow(b)))
+      assert(ex.getMessage.contains(why), ex.getMessage)
+    }
+    rejects(Array.emptyByteArray, "not Confluent-framed")
+    rejects(Array[Byte](0, 0, 0, 7), "not Confluent-framed")
+    rejects(good.updated(0, 1.toByte), "not Confluent-framed")
+    rejects(avroBytes(AvroWire.MessageKeySchema, Seq("m-1"), Some(8)), "schema id 8")
+    // still decodes after the rejections: no state was left behind
+    assert(dec.eval(InternalRow(good)).asInstanceOf[InternalRow]
+      .getUTF8String(0).toString == "m-1")
+  }
+
+  test("unframeConfluent plans exactly one AvroDecode per framed column") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val dir = Files.createTempDirectory("unframe_plan").toString + "/t"
+    KafkaIO.frameConfluent(wireRows.toDS()).write.parquet(dir)
+    val df = KafkaIO.unframeConfluent(spark.read.parquet(dir))
+    assert(df.collect().toSet == wireRows.toSet)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val decodes = plan.collect { case n => n.expressions }.flatten
+      .flatMap(_.collect { case d: AvroDecode => d.schemaJson })
+    // four value fields are extracted, but the decoder runs once per row
+    assert(decodes.sorted == Seq(AvroWire.MessageKeySchema, AvroWire.MessageStatusSchema).sorted,
+      plan.toString)
+  }
+
+  test("memkafka splits a large offset range into contiguous covering ranges") {
+    import memkafka.MemKafkaMicroBatchStream.{MinRecordsPerSplit => Min, split}
+    for (from <- Seq(0L, 17L, 123456L); n <- Seq(0L, 1L, Min - 1L, Min.toLong,
+        2L * Min - 1, 2L * Min, 50000L, 1000003L); par <- Seq(1, 2, 4, 7, 32)) {
+      val rs = split(from, from + n, par)
+      assert(rs.nonEmpty && rs.head._1 == from && rs.last._2 == from + n)
+      rs.sliding(2).foreach {
+        case Array(a, b) => assert(a._2 == b._1)
+        case _ =>
+      }
+      assert(rs.forall { case (a, b) => a <= b })
+      if (n < 2L * Min) assert(rs.length == 1, (from, n, par))
+      assert(rs.length <= par)
+      if (rs.length > 1) assert(rs.forall { case (a, b) => b - a >= Min })
+    }
+    assert(split(0L, 50000L, 4).length == 4)
+    assert(split(0L, 900L, 4).length == 1)
+    // planned through the source: the session's parallelism caps it
+    val par = spark.sparkContext.defaultParallelism
+    val stream = new memkafka.MemKafkaMicroBatchStream("unused")
+    import memkafka.MemOffset
+    assert(stream.planInputPartitions(MemOffset(0L), MemOffset(900L)).length == 1)
+    assert(stream.planInputPartitions(MemOffset(5L), MemOffset(5L + 100L * Min)).length == par)
+  }
+
+  test("split memkafka reads return every record once across a restart") {
+    import spark.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import memkafka.{MemBroker, MemKafkaMicroBatchStream, MemKafkaProvider, MemOffset}
+    val fmt = classOf[MemKafkaProvider].getName
+    val topic = "split_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val tmp = Files.createTempDirectory("memkafka_split")
+    val epoch = 3 * MemKafkaMicroBatchStream.MinRecordsPerSplit
+    val msgs = (0 until 2 * epoch).map(i =>
+      MessageStatus(s"m-$i", "sent", i.toLong, "att", 1700000000000L + i))
+    assert(new MemKafkaMicroBatchStream(topic)
+      .planInputPartitions(MemOffset(0L), MemOffset(epoch.toLong)).length > 1)
+
+    val src = MemoryStream[MessageStatus]
+    val prod = KafkaIO.frameConfluent(src.toDS()).writeStream.format(fmt)
+      .option("topic", topic)
+      .option("checkpointLocation", tmp.resolve("prod").toString).start()
+    val out = tmp.resolve("out").toString
+    def consumer() = KafkaIO.unframeConfluent(
+        spark.readStream.format(fmt).option("topic", topic).load())
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", tmp.resolve("cons").toString).start()
+    try {
+      src.addData(msgs.take(epoch)); prod.processAllAvailable()
+      val c1 = consumer()
+      c1.processAllAvailable(); c1.stop()
+      src.addData(msgs.drop(epoch)); prod.processAllAvailable()
+      val c2 = consumer()
+      c2.processAllAvailable(); c2.stop()
+    } finally {
+      prod.stop()
+      MemBroker.clear(topic)
+    }
+    val got = spark.read.parquet(out).as[MessageStatus].collect()
+    assert(got.length == msgs.length)
+    assert(got.sortBy(_.phoneNumber).toSeq == msgs)
   }
 
   test("kafka writer carries the reference reliability options") {
