@@ -322,6 +322,22 @@ object Dedup {
         }
     }
 
+  /** Whether persisted `df`, once materialized, is no larger than the
+    * session's `autoBroadcastJoinThreshold` — the planner's own
+    * size rule, applied to the cached bytes rather than an estimate.
+    * Materializes the cache (its consumers would anyway); a disabled
+    * threshold (-1) skips that and answers false. */
+  private[operators] def fitsBroadcast(df: DataFrame): Boolean = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    threshold >= 0 && {
+      df.count()
+      // a fresh plan: a cached relation's stats switch from the
+      // estimate to the measured bytes only once it is loaded
+      df.select(df.columns.toIndexedSeq.map(df.col): _*)
+        .queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+    }
+  }
+
   /** Bound on distinct (corpus, signature-config) relations kept cached
     * at once; beyond it the least-recently-used relation is released
     * automatically, so a long-lived driver cycling through corpora
@@ -456,7 +472,9 @@ object Dedup {
     * pair is verified with the exact codegen'd cosine. Recall is
     * LSH-bounded (sign-LSH is weak at low cosine thresholds; measured
     * against the exact baseline in DedupSpec) and rises with more
-    * tables; the plan shape is what survives 100 TB. The hyperplanes
+    * tables. The band self-join broadcasts only while the cached band
+    * relation fits `autoBroadcastJoinThreshold` and shuffles above it,
+    * so no side is sized by the corpus on the driver. The hyperplanes
     * are portable-hash-derived literals embedded in BOTH engines, so
     * buckets — and therefore results — are bit-identical.
     */
@@ -494,19 +512,18 @@ object Dedup {
     }
     // The band relation (explode + the 64-projection bucket assignment,
     // the expensive narrow map) is PERSISTED through the session
-    // signature registry and the self-join broadcasts one cached side:
-    // one band computation and ZERO join exchanges, versus the previous
-    // shuffle_hash form whose two sides each recomputed the projection
-    // and shuffled it (the r15 plan audit showed ReuseExchange not
-    // deduplicating the sides under AQE: 2 Exchanges + 2 Generate
-    // subtrees). The band relation is O(n·tables) rows of
-    // (id, short key) — the same registry/posture as x02's persisted
-    // signature relation; the broadcast side is the banded KEYS only,
-    // never vectors.
+    // signature registry, so both self-join sides read one cached copy
+    // (the r15 plan audit showed ReuseExchange not deduplicating two
+    // recomputed sides under AQE: 2 Exchanges + 2 Generate subtrees).
+    // The band relation is O(n·tables) rows of (id, short key) — the
+    // same registry/posture as x02's persisted signature relation. When
+    // its cached size fits `autoBroadcastJoinThreshold` the self-join
+    // broadcasts one side (ZERO join exchanges); above it both sides
+    // shuffle, so the driver never collects an O(n) relation.
     val bands = persistShared(capBandBuckets(
       e.select(col("vec_id"), explode(array(bandCols: _*)).as("bk")),
       "vec_id", maxBandBucket))
-    val cand = broadcast(bands).alias("x")
+    val cand = (if (fitsBroadcast(bands)) broadcast(bands) else bands).alias("x")
       .join(bands.alias("y"),
         col("x.bk") === col("y.bk") && col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("a"), col("y.vec_id").as("b")).distinct()

@@ -348,9 +348,21 @@ object Similarity {
     // Lloyd pass). Overlap the two ladders as concurrent driver jobs
     // (guide §2.6): the scheduler interleaves their small stages and
     // the wall cost is max(coarse, pq) instead of the sum. Both models
-    // are pure functions of their input — results are unchanged.
-    val coarseF = scala.concurrent.Future(trainCentroids(e, lloydIters))(
-      scala.concurrent.ExecutionContext.global)
+    // are pure functions of their input — results are unchanged. The
+    // coarse ladder runs on its own thread with the caller's local
+    // properties (job group, description, pool) and session, as Spark's
+    // broadcast and subquery threads do; a pooled thread would carry
+    // whatever it inherited when it was created. Its jobs also carry a
+    // private tag, so a failed PQ ladder cancels them and no job
+    // outlives the call.
+    val sc = e.sparkSession.sparkContext
+    val coarseTag = s"graft-ann-coarse-${java.util.UUID.randomUUID()}"
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    val coarseF = try org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+        e.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool) {
+        sc.addJobTag(coarseTag)
+        trainCentroids(e, lloydIters)
+      } finally pool.shutdown()
     val un0 = e.select(col("vec_id"), col("v"), col("nrm"),
       expr("transform(v, x -> x / nrm)").as("u"))
     // optional OPQ dimension permutation (x78): u reordered BEFORE
@@ -361,9 +373,14 @@ object Similarity {
       un0.withColumn("u",
         array(p.toSeq.map(d => element_at(col("u"), d + 1)): _*))
     }
-    val pq = trainPq(un.select(col("vec_id"), col("u")), PqIters)
-    val coarse = scala.concurrent.Await.result(
-      coarseF, scala.concurrent.duration.Duration.Inf)
+    val pq = try trainPq(un.select(col("vec_id"), col("u")), PqIters)
+      catch { case t: Throwable =>
+        sc.cancelJobsWithTag(coarseTag)
+        scala.util.Try(coarseF.get())
+        throw t
+      }
+    val coarse = try coarseF.get()
+      catch { case ee: java.util.concurrent.ExecutionException => throw ee.getCause }
     val index = un.select(col("vec_id"),
       element_at(graft.functions.CentroidTopCids(
         col("v"), col("nrm"), coarse, NProbe), 1).as("cid"),

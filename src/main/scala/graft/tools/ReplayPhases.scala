@@ -144,8 +144,6 @@ object ReplayPhases {
       val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.shuffle.partitions", "8")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set(
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
       try {
         val ckpt = java.nio.file.Files.createTempDirectory(

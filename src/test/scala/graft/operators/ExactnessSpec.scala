@@ -147,6 +147,39 @@ class ExactnessSpec extends SparkSpec {
     info(f"per-dim energy max/min ratio: ${en.max.toDouble / en.min}%.3f")
   }
 
+  test("IVF-PQ coarse training runs under the caller's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    // (job group, whether the job trains the coarse quantizer)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")) ->
+          j.stageInfos.exists(_.details.contains("trainCentroids")))
+    }
+    val sc = spark.sparkContext
+    val emb = graft.Tables.embeddings(spark, sf)
+    sc.addSparkListener(listener)
+    try {
+      // a second group catches a pooled thread that kept the first one's
+      for (g <- Seq("ann-first", "ann-second")) {
+        jobs.clear()
+        sc.setJobGroup(g, "ann training")
+        try Similarity.annIvfPq(emb, 0L until 2L)
+        finally sc.clearJobGroup()
+        // listener events arrive in order: once a later job shows up,
+        // every training job has
+        sc.setJobGroup(s"$g-end", "drain"); sc.parallelize(Seq(1)).count(); sc.clearJobGroup()
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (!jobs.asScala.exists(_._1 == s"$g-end") && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        val seen = jobs.asScala.toSeq.filter(_._1 != s"$g-end")
+        assert(seen.exists(_._2), s"no coarse-training job recorded: $seen")
+        assert(seen.forall(_._1 == g), s"jobs outside the caller's group $g: $seen")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("x05 banded pairs are a subset of exact pairs; recall reported") {
     val emb = graft.Tables.embeddings(spark, sf)
     def pairs(df: org.apache.spark.sql.DataFrame) =

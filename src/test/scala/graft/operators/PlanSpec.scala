@@ -62,6 +62,22 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("BroadcastNestedLoopJoin"), "x05 must not nested-loop-join")
   }
 
+  test("x05/x37 band self-join broadcasts only under the size threshold") {
+    def bandJoin(kind: String) = (kind + """ \[bk#\d+\], \[bk#\d+\]""").r
+    val p = plan(Dedup.x05(spark, sf))
+    assert(bandJoin("BroadcastHashJoin").findFirstIn(p).nonEmpty,
+      s"fixture-sized bands must broadcast:\n$p")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try for (df <- Seq(Dedup.x05(spark, sf), Dedup.x37(spark, sf))) {
+      val p = plan(df)
+      assert(bandJoin("(?:SortMergeJoin|ShuffledHashJoin)").findFirstIn(p).nonEmpty &&
+        !p.contains("BroadcastExchange"),
+        s"bands over the threshold must shuffle, not broadcast:\n$p")
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("x12 Lloyd passes share one codegen source (no per-pass compile)") {
     import org.apache.spark.metrics.source.CodegenMetrics
     // Warm every distinct plan shape (seed pass, training passes, the

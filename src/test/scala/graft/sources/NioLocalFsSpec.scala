@@ -1,15 +1,21 @@
 package graft.sources
 
+import java.io.{File, FileNotFoundException}
+import java.net.URI
 import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, FileUtil,
+  LocalFileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+  ChecksumCheckpointFileManager, FileContextBasedCheckpointFileManager}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fork-free local FS must be byte- and permission-compatible with
-  * stock Hadoop local FS — it only changes HOW a chmod happens (one
-  * java.nio call instead of a shell fork), never the outcome. */
+  * stock Hadoop local FS — it only changes HOW a chmod or a link read
+  * happens (one java.nio call instead of a shell fork), never the
+  * outcome. */
 class NioLocalFsSpec extends AnyFunSuite {
 
   private def newConf(): Configuration = {
@@ -106,7 +112,6 @@ class NioLocalFsSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("nio_afs_spec_").toFile
     try {
       val p = new Path(new java.io.File(dir, "wal").getAbsolutePath)
-      import org.apache.hadoop.fs.CreateFlag
       val out = fc.create(p,
         java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
       out.write("offsets".getBytes); out.close()
@@ -118,5 +123,93 @@ class NioLocalFsSpec extends AnyFunSuite {
     } finally {
       Option(dir.listFiles()).foreach(_.foreach(_.delete())); dir.delete()
     }
+  }
+
+  private def rawFs(fs: RawLocalFileSystem): RawLocalFileSystem = {
+    fs.initialize(URI.create("file:///"), new Configuration(false)); fs
+  }
+
+  private def rmTree(f: File): Unit = {
+    if (!Files.isSymbolicLink(f.toPath)) Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete()
+  }
+
+  /** The value, or the class of what it threw. */
+  private def outcome[T](v: => T): Either[Class[_], T] =
+    try Right(v) catch { case e: Exception => Left(e.getClass) }
+
+  private def view(s: FileStatus) =
+    (s.isSymlink, if (s.isSymlink) s.getSymlink else null, s.isDirectory, s.getLen, s.getPath)
+
+  test("link status and link target match stock RawLocalFileSystem") {
+    val stock = rawFs(new RawLocalFileSystem)
+    val nio = rawFs(new NioRawLocalFileSystem)
+    val dir = Files.createTempDirectory("nio_fs_link_").toFile
+    try {
+      val file = new File(dir, "f")
+      Files.write(file.toPath, "12345".getBytes)
+      val link = new File(dir, "link")
+      Files.createSymbolicLink(link.toPath, file.toPath)
+      val dangling = new File(dir, "dangling")
+      Files.createSymbolicLink(dangling.toPath, new File("gone").toPath)
+      val cases = Seq(
+        "file, qualified" -> new Path("file:" + file.getAbsolutePath),
+        "file, bare" -> new Path(file.getAbsolutePath),
+        "directory" -> new Path(dir.getAbsolutePath),
+        "symlink, bare" -> new Path(link.getAbsolutePath),
+        "dangling symlink" -> new Path(dangling.getAbsolutePath),
+        "missing" -> new Path(new File(dir, "missing").getAbsolutePath))
+      for ((name, p) <- cases) {
+        val want = outcome(view(stock.getFileLinkStatus(p)))
+        assert(outcome(view(nio.getFileLinkStatus(p))) == want, name)
+        assert(outcome(stock.getLinkTarget(p)) == outcome(nio.getLinkTarget(p)), name)
+      }
+      // the cases reach every branch
+      val bare = nio.getFileLinkStatus(new Path(link.getAbsolutePath))
+      assert(bare.isSymlink && bare.getSymlink.toUri.getPath == file.getAbsolutePath)
+      assert(nio.getLinkTarget(new Path(dangling.getAbsolutePath)) == new Path("gone"))
+      assert(!nio.getFileLinkStatus(new Path("file:" + file.getAbsolutePath)).isSymlink)
+      assert(outcome(nio.getFileLinkStatus(cases.last._2)) == Left(classOf[FileNotFoundException]))
+    } finally rmTree(dir)
+  }
+
+  test("checksummed checkpoint write and FileContext rename start no Shell process") {
+    val dir = Files.createTempDirectory("nio_fs_forks_").toFile
+    try {
+      // control: the recording sees a Hadoop Shell fork when one happens
+      val (_, control) = ShellForks.during(FileUtil.readLink(dir))
+      assert(control.exists(_.startsWith("readlink")), control)
+
+      val conf = newConf()
+      val base = CheckpointFileManager.create(new Path(dir.getAbsolutePath), conf)
+      assert(base.isInstanceOf[FileContextBasedCheckpointFileManager])
+      val mgr = new ChecksumCheckpointFileManager(base, false, 2, false)
+      val offset = new Path(new File(dir, "0").getAbsolutePath)
+      try {
+        val (_, forks) = ShellForks.during {
+          val out = mgr.createAtomic(offset, false)
+          out.write("offsets".getBytes); out.close()
+        }
+        assert(forks.isEmpty, s"checkpoint write forked: $forks")
+        val in = mgr.open(offset) // verifies against the .crc companion
+        val buf = new Array[Byte](7); in.readFully(buf); in.close()
+        assert(new String(buf) == "offsets")
+      } finally mgr.close()
+      assert(new File(dir, "0.crc").exists(),
+        "checksum companion must still be written")
+
+      val fc = FileContext.getFileContext(URI.create("file:///"), conf)
+      def put(name: String, body: String): Path = {
+        val p = new Path(new File(dir, name).getAbsolutePath)
+        val out = fc.create(p, java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
+        out.write(body.getBytes); out.close(); p
+      }
+      val src = put("src", "new")
+      val dst = put("dst", "old")
+      val (_, forks) = ShellForks.during(fc.rename(src, dst, Options.Rename.OVERWRITE))
+      assert(forks.isEmpty, s"rename forked: $forks")
+      assert(!new File(dir, "src").exists())
+      assert(new String(Files.readAllBytes(new File(dir, "dst").toPath)) == "new")
+    } finally rmTree(dir)
   }
 }

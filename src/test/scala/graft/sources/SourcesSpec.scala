@@ -217,6 +217,66 @@ class SourcesSpec extends SparkSpec {
     assert(alerts.head.deadline == t0 + timeout)
   }
 
+  test("alert pipeline micro-batches start no Hadoop Shell process") {
+    // Every offset, commit and state-delta file is renamed into place
+    // through FileContext; on the fork-free FS none of it may exec.
+    // SparkSpec's session keeps Hadoop's stock FS, so this runs in a
+    // child session whose Hadoop conf names the benchmarked classes.
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val ss = spark.newSession()
+    ss.conf.set("fs.file.impl", classOf[GraftLocalFileSystem].getName)
+    ss.conf.set("fs.file.impl.disable.cache", "true")
+    ss.conf.set("fs.AbstractFileSystem.file.impl", classOf[GraftRawLocalFs].getName)
+    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+    import ss.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = ss.sqlContext
+    val fmt = classOf[memkafka.MemKafkaProvider].getName
+    val topic = "forks_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val tmp = Files.createTempDirectory("memkafka_forks")
+    val t0 = 1700000000000L
+    val timeout = 10000L
+    val epochMs = 2 * timeout
+
+    val src = MemoryStream[MessageStatus]
+    val prod = KafkaIO.frameConfluent(src.toDS()).writeStream.format(fmt)
+      .option("topic", topic)
+      .option("checkpointLocation", tmp.resolve("prod").toString).start()
+    val alerted = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val cons = UndeliveredDetector.alerts(
+      KafkaIO.unframeConfluent(ss.readStream.format(fmt).option("topic", topic).load()),
+      timeout, "1 second")
+      .writeStream.foreachBatch { (b: Dataset[UndeliveredAlert], _: Long) =>
+        b.collect().foreach(a => alerted.add(a.messageId))
+      }
+      .option("checkpointLocation", tmp.resolve("cons").toString).start()
+    // even keys are delivered in time, odd keys never
+    def epoch(i: Int): Unit = {
+      src.addData((0 until 20).flatMap { k =>
+        val sent = MessageStatus(s"m-$i-$k", "sent", k.toLong, "att", t0 + i * epochMs + k)
+        if (k % 2 == 0) Seq(sent, sent.copy(status = "delivered", timestamp = sent.timestamp + 1000))
+        else Seq(sent)
+      })
+      prod.processAllAvailable()
+      cons.processAllAvailable()
+    }
+    try {
+      epoch(0) // query start-up (checkpoint dirs, metadata) is outside the window
+      val before = cons.recentProgress.length
+      val (_, forks) = ShellForks.during((1 to 5).foreach(epoch))
+      assert(forks.isEmpty, s"Hadoop Shell processes during micro-batches: $forks")
+      assert(cons.recentProgress.length - before >= 5)
+    } finally {
+      prod.stop(); cons.stop()
+      memkafka.MemBroker.clear(topic)
+    }
+    // epochs 0-3 are past the watermark once epoch 5 is consumed
+    val got = alerted.toArray.toSet
+    for (i <- 0 to 3; k <- 0 until 20)
+      assert(got.contains(s"m-$i-$k") == (k % 2 == 1), s"m-$i-$k")
+  }
+
   /** Reference bytes: Avro's own GenericDatumWriter over `values` in
     * schema field order, optionally behind the Confluent header. */
   private def avroBytes(schemaJson: String, values: Seq[Any],
